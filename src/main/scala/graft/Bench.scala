@@ -42,15 +42,10 @@ object Bench {
     bloomExpectedPerPartition =
       sys.env.getOrElse("SPARK_GRAFT_BLOOM_EXPECTED", (1 << 16).toString).toLong,
     // mapside is the bench default: it is the design-point tier AND, under
-    // commit pipelining, the only tier whose per-round driver work is O(1)
+    // pipelined commits, the only tier whose per-round driver work is O(1)
     // — the broadcast tier's sketch collect forces the round's discovery
     // branch on the foreground thread before the next round can start
-    sketchDelivery = sys.env.getOrElse("SPARK_GRAFT_SKETCH_DELIVERY", "mapside"),
-    commitPipelining = sys.env.getOrElse("SPARK_GRAFT_PIPELINE", "on") != "off",
-    // hop tier for the pipelined cross-round frames: "cache" (default) or
-    // "checkpoint" (cluster-durable) — lets the scaling bench price the
-    // durable tier's extra write+read against the cache hop
-    pipelineHop = sys.env.getOrElse("SPARK_GRAFT_PIPELINE_HOP", "cache"))
+    sketchDelivery = sys.env.getOrElse("SPARK_GRAFT_SKETCH_DELIVERY", "mapside"))
 
   /** Bootstrap `catalogDir` from `corpusDir` (ingest: canonicalize + seed). */
   def bootstrapCatalog(spark: SparkSession, corpusDir: String, catalogDir: String,
@@ -357,7 +352,7 @@ object ScalingBench {
          |
          |Workload: batch-iterative crawl, FixtureGen corpus on tmpfs
          |(textScale=$textScale), $rounds rounds per run, hostBudget=${Bench.benchCfg(head.parts).hostBudget},
-         |sketch delivery "$delivery", commit pipelining ${Bench.benchCfg(head.parts).commitPipelining},
+         |sketch delivery "$delivery",
          |JVM heap $heap. Within a size, the partition count P (table below)
          |is IDENTICAL at both parallelism levels of a pairing — same plan,
          |task set and sketch math; only executor-core count varies

@@ -53,21 +53,16 @@ object SparkEntry {
     // GRAFT_CRAWL_TIMING, warm JVM): ~2.7 s fixture-gen + bootstrap + final
     // aggregate, then per round ~1.8 s run+rank (compute — ~15 toy-sized
     // Spark jobs, pure scheduler overhead at 8-40 fetches/round) + the
-    // commit. Config is the design-point pairing and the measured best of
-    // the 2x2 {sync,pipelined}x{broadcast,mapside} grid (warm q34 wall:
-    // 14.9 / 12.4* / 11.1 / 10.3 s):
-    //  - MAPSIDE sketch delivery: the broadcast tier's per-round driver
-    //    collect forces the sketch-merge job in the timed window (~1 s/
-    //    round) AND (r3 finding) serializes the discovery branch under
-    //    pipelining — it alone explains the r3/r4 "pipelining loses at toy
-    //    scale" 10.7->12.7 s history (*12.4 was sync+broadcast, r4's pick).
-    //  - PIPELINED commits: with the collect gone the next round's compute
-    //    genuinely overlaps the commit wall again (~0.5 s/round back).
-    // Committed bytes are identical across all four combinations (CrawlSpec
-    // tier + pipelined≡sync parity tests), so the golden oracle is unchanged.
+    // commit, which the loop pipelines under the next round's compute.
+    // MAPSIDE sketch delivery is the design-point tier and the measured
+    // faster one here (warm q34 wall 10.3 s vs 11.1 s for broadcast): the
+    // broadcast tier's per-round driver collect forces the sketch-merge job
+    // in the timed window (~1 s/round) AND serializes the discovery branch
+    // behind it, so the next round's compute no longer overlaps the commit.
+    // Committed bytes are identical across tiers (CrawlSpec tier parity),
+    // so the golden oracle is unchanged.
     val cfg = CrawlConfig(numPartitions = 8, hostBudget = 8, roundBudget = 512,
-      bloomExpectedPerPartition = 1 << 12, commitPipelining = true,
-      sketchDelivery = "mapside")
+      bloomExpectedPerPartition = 1 << 12, sketchDelivery = "mapside")
     val catalog = new HadoopSnapshotCatalog(s"$dir/catalog")
     val pages = spark.read.parquet(s"$dir/pages.parquet")
     val robots = spark.read.parquet(s"$dir/robots.parquet")

@@ -173,25 +173,6 @@ object Crawl {
     }
   }
 
-  /** Run rounds `from..until` (inclusive), committing each. Returns per-round
-    * results. Stops early when the frontier drains.
-    *
-    * Serial-floor discipline (the measured crawl-throughput bound was the
-    * per-round job count, not compute):
-    *   - `pages_canon` is loaded ONCE, repartitioned by `canon_url` (the
-    *     fetch-join key, Spark-native hashing so Catalyst recognizes it)
-    *     and cached — every round's fetch join then leaves the corpus side
-    *     exchange-free instead of re-shuffling the full corpus per round.
-    *     On a real cluster this is an Iceberg bucketed-table read; in cache
-    *     form it is the same SPJ contract. `robots_rules` likewise.
-    *   - the driver-side sketch map is refreshed from the round's persisted
-    *     `url_seen` frame right after commit (P tiny rows), so no round
-    *     starts with a catalog read just to rebuild it.
-    *   - metrics are Observations riding the commit writes (see
-    *     [[CrawlRound.RoundOutput]]) — zero dedicated metric jobs.
-    *   - no up-front `isEmpty` probe: an empty frontier yields fetched == 0
-    *     through the same dataflow and stops the loop.
-    */
   /** Long-lived per-crawl state: the corpus cached WITH the fetch-join
     * partitioning (HashPartitioning(canon_url, P) — Catalyst-recognized, so
     * every round's fetch join leaves the corpus side exchange-free), the
@@ -245,6 +226,26 @@ object Crawl {
     CrawlState(pagesCanon, robotsStatic, robotsSource, sk)
   }
 
+  /** Checkpoint root for the loop's cross-round hop: `cfg.checkpointDir`
+    * when set, else the SparkContext's own dir — created as one temp dir per
+    * context (deleted at JVM exit) only when it has none. setCheckpointDir
+    * adds a fresh UUID subdir per call, so crawls sharing a context never
+    * collide. Checkpoint files retire with their RDDs when
+    * spark.cleaner.referenceTracking.cleanCheckpoints is on; otherwise one
+    * narrow frame-set per round accumulates (bounded by crawl length, GC'd
+    * out-of-band — the same lifecycle as Iceberg's expired-snapshot files). */
+  private def useCheckpointDir(spark: SparkSession, cfg: CrawlConfig): Unit = {
+    val sc = spark.sparkContext
+    if (cfg.checkpointDir.nonEmpty) sc.setCheckpointDir(cfg.checkpointDir)
+    else if (sc.getCheckpointDir.isEmpty) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-").toFile
+      sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+      sc.setCheckpointDir(dir.toString)
+    }
+  }
+
+  /** [[runRounds]] over a [[CrawlState]] opened for this call and closed
+    * after it. */
   def runRounds(
       spark: SparkSession,
       catalog: StateCatalog,
@@ -254,18 +255,49 @@ object Crawl {
     try runRounds(spark, catalog, cfg, maxRounds, st) finally st.close()
   }
 
-  /** Frame-lifetime rule of the pipelined loop: round N's caches back (a)
-    * commit N's writes and (b) round N+1's OUTPUT plans (frontierNext_{N+1}
-    * is built over frontierNext_N, etc.), which materialize no later than
-    * commit N+1. So frames_N retire exactly when commit N+1 settles —
-    * freeing them earlier would silently recompute plans whose inputs are
-    * gone (and re-sample the rank's range boundaries: a correctness trap,
-    * not just a slowdown). */
+  /** Frame-lifetime rule of the pipelined loop: round N's caches back
+    * commit N's writes and nothing else — round N+1 reads round N's outputs
+    * only through the checkpoint hop — so frames_N retire when commit N
+    * settles. Freeing them before that would silently recompute the
+    * commit's plans (and re-sample the rank's range boundaries: a
+    * correctness trap, not just a slowdown). */
   private final case class InFlight(
       round: Int,
       fut: scala.concurrent.Future[CrawlRound.RoundResult],
       frames: Seq[DataFrame])
 
+  /** Run up to `maxRounds` rounds after the latest committed one,
+    * committing each. Returns per-round results. Stops early when the
+    * frontier drains.
+    *
+    * Commits are PIPELINED: round N's commit (table writes + manifest) runs
+    * on a commit thread under round N+1's compute. The commit is a fixed
+    * per-round cost (parquet writes, mostly I/O-bound — measured at ~half
+    * the round wall at 16 cores) that does not shrink with cores, so hiding
+    * it is the single biggest Amdahl cut in the loop. Depth is exactly 1
+    * and commit N settles before commit N+1 starts (manifests are ordered,
+    * and the append-delta chain of N+1 anchors on N's manifest), so a crash
+    * loses at most the one in-flight round, and resume re-reads everything
+    * from the catalog. Cross-round frames cross the round boundary through
+    * reliable checkpoints (see `hop` below), so executor loss recomputes
+    * nothing.
+    *
+    * Serial-floor discipline (the measured crawl-throughput bound was the
+    * per-round job count, not compute):
+    *   - `pages_canon` is loaded ONCE, repartitioned by `canon_url` (the
+    *     fetch-join key, Spark-native hashing so Catalyst recognizes it)
+    *     and cached — every round's fetch join then leaves the corpus side
+    *     exchange-free instead of re-shuffling the full corpus per round.
+    *     On a real cluster this is an Iceberg bucketed-table read; in cache
+    *     form it is the same SPJ contract. `robots_rules` likewise.
+    *   - the driver-side sketch map is refreshed from the round's persisted
+    *     `url_seen` frame right after commit (P tiny rows), so no round
+    *     starts with a catalog read just to rebuild it.
+    *   - metrics are Observations riding the commit writes (see
+    *     [[CrawlRound.RoundOutput]]) — zero dedicated metric jobs.
+    *   - no up-front `isEmpty` probe: an empty frontier yields fetched == 0
+    *     through the same dataflow and stops the loop.
+    */
   def runRounds(
       spark: SparkSession,
       catalog: StateCatalog,
@@ -274,6 +306,7 @@ object Crawl {
       state: CrawlState): Seq[CrawlRound.RoundResult] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
+    val quiesce = Duration(cfg.commitQuiesceTimeoutSec.toLong, "sec")
     val startRound = catalog.latestRound.getOrElse(
       throw new IllegalStateException("catalog not bootstrapped")) + 1
     val pagesCanon = state.pagesCanon
@@ -282,28 +315,18 @@ object Crawl {
     val mapside = cfg.sketchDelivery == "mapside"
     val timing = sys.env.contains("GRAFT_CRAWL_TIMING")
 
-    // Cross-round frame hop (see CrawlConfig.pipelineHop). Both tiers force
-    // the frame on the calling thread (df.rdd materializes the AQE stages;
-    // checkpoint() is eager by design), so the overlap shape is identical —
-    // only the durability of the handed-off bytes differs.
-    if (cfg.pipelineHop != "checkpoint" && cfg.pipelineHop != "cache")
-      throw new IllegalArgumentException(s"unknown pipelineHop ${cfg.pipelineHop}")
-    val hopCheckpoint = cfg.commitPipelining && cfg.pipelineHop == "checkpoint"
-    if (hopCheckpoint) {
-      val dir =
-        if (cfg.checkpointDir.nonEmpty) cfg.checkpointDir
-        else java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
-      // idempotent: setCheckpointDir creates a fresh UUID subdir per call,
-      // so two crawls sharing a session never collide. Checkpoint files
-      // retire with the RDDs when spark.cleaner.referenceTracking
-      // .cleanCheckpoints is on; otherwise one narrow frame-set per round
-      // accumulates (bounded by crawl length, GC'd out-of-band — the same
-      // lifecycle as Iceberg's expired-snapshot files).
-      spark.sparkContext.setCheckpointDir(dir)
-    }
-    def hop(df: DataFrame): DataFrame =
-      if (hopCheckpoint) df.checkpoint() // eager + RELIABLE: lineage ends at durable files
-      else spark.createDataFrame(df.rdd, df.schema) // flat LogicalRDD over the pinned cache
+    // Cross-round frame hop: reliable Dataset.checkpoint() — eager, so the
+    // frame is forced on the calling thread under the in-flight commit, and
+    // the handed-off plan's lineage ends at durable files: executor loss
+    // recomputes nothing (a recompute would re-sample the rank's range
+    // boundaries — wrong fetch_seq). Chaining raw DataFrames instead grows
+    // the LOGICAL tree exponentially in round count (a round's plan embeds
+    // its input frame several times over: eligibility, scheduled anti-join,
+    // discovery union) — measured as a driver OOM just stringifying a
+    // 3-round tree. The hop plays the role an Iceberg table boundary plays
+    // on a real cluster; the frames are narrow (frontier/sketch rows).
+    useCheckpointDir(spark, cfg)
+    def hop(df: DataFrame): DataFrame = df.checkpoint()
 
     // Commit executor: ONE dedicated daemon thread. Commits must be ordered
     // (manifest N settles before commit N+1 starts — N+1's append chain
@@ -378,12 +401,11 @@ object Crawl {
     }
 
     var inFlight: Option[InFlight] = None
-    var retired: Seq[DataFrame] = Nil // frames of the last SETTLED round
     var lastRes: Option[CrawlRound.RoundResult] = None
 
     // Every frame the loop has pinned and not yet released. Cleanup runs in
     // the finally block over whatever is left, so an exception at ANY point
-    // of a round (compute, barrier, commit submission) releases the settled
+    // of a round (compute, barrier, commit submission) releases the in-flight
     // round's caches AND the half-built round's — not just the happy path's.
     val live = scala.collection.mutable.LinkedHashSet[DataFrame]()
     def release(dfs: Iterable[DataFrame]): Unit = dfs.foreach { df =>
@@ -391,10 +413,45 @@ object Crawl {
     }
     staticDelays.foreach(live += _) // crawl-lifetime pin, released with the rest
 
+    // Abandon a commit that did not settle within the quiesce timeout, in
+    // three layers:
+    //   1. the poison flag (commitAbandoned, polled by the catalog before
+    //      each not-yet-started table write and again immediately before
+    //      the manifest rename) stops the commit from publishing or
+    //      starting new writes;
+    //   2. cancelJobGroup kills the RUNNING table-write jobs — they run on
+    //      the catalog's shared pool, which shutdownNow below cannot reach,
+    //      and a wedged write would otherwise leak that pool's thread
+    //      forever AND keep reading frames release(live) is about to unpin
+    //      (plain cancelJobGroup, not ...AndFutureJobs: the latter
+    //      blacklists the group id and would kill a same-JVM retry of this
+    //      round);
+    //   3. shutdownNow() interrupts the orchestrator thread blocked in the
+    //      catalog's internal Await.
+    // Net: no manifest for the round can appear after the caller observed
+    // the crawl as failed (the abort poll is adjacent to the rename), and
+    // no abandoned write outlives the quiesce to race a retry's .tmp paths
+    // beyond cancellation-delivery latency.
+    def abandon(f: InFlight): Unit = {
+      inFlight = None // never waited on again, not even by the finally block
+      commitAbandoned.set(true)
+      spark.sparkContext.cancelJobGroup(StateCatalog.commitJobGroup(f.round))
+      commitPool.shutdownNow()
+    }
+
+    // Bounded like the finally-block quiesce: a wedged commit (hung
+    // filesystem write) surfaces as a failure within the timeout, never as
+    // a crawl that hangs forever at the barrier.
     def settle(): Unit = inFlight.foreach { f =>
-      val res = Await.result(f.fut, Duration.Inf)
-      release(retired)
-      retired = f.frames
+      val res =
+        try Await.result(f.fut, quiesce)
+        catch {
+          case e: java.util.concurrent.TimeoutException =>
+            abandon(f)
+            throw new IllegalStateException(s"commit r${f.round} did not settle " +
+              s"within ${cfg.commitQuiesceTimeoutSec}s — abandoned, not published", e)
+        }
+      release(f.frames)
       results += res
       lastRes = Some(res)
       inFlight = None
@@ -455,9 +512,9 @@ object Crawl {
           // rankPriority: distinct + pin the accumulated edge set (the K
           // unrolled LinkRank iterations scan it 2K+1 times), rank it, and
           // hand the bucketed tiers to the round. The signal covers rounds
-          // < this one in BOTH commit modes (parity). Lifecycle: the pin
+          // < this one, exactly as on resume (parity). Lifecycle: the pin
           // backs this round's cached frames (priority embeds rank_bucket),
-          // so it retires with them when commit round+1 settles.
+          // so it retires with them when this round's commit settles.
           val edgesPin = hostEdges.map { e => val p = e.distinct().persist(); live += p; p }
           val hostRanks = edgesPin.map(e => graft.operators.LinkRank.bucketByRank(
             graft.operators.LinkRank.linkRank(e, cfg.rankIters), cfg.rankBuckets))
@@ -511,7 +568,7 @@ object Crawl {
           if (lastRes.exists(noProgress)) {
             // the previous round turned out to be the drain: this round ran
             // SPECULATIVELY and is discarded uncommitted — committed state
-            // stays identical to the sequential loop's.
+            // stays identical to a one-round-at-a-time crawl's.
             release(out.persisted ++ Seq(out.frontierNext, sketchNext) ++ edgesPin.toSeq)
             continue = false
           } else {
@@ -568,69 +625,32 @@ object Crawl {
             inFlight = Some(InFlight(round, fut,
               out.persisted ++ Seq(out.frontierNext, sketchNext) ++ edgesPin.toSeq))
 
-            if (cfg.commitPipelining) {
-              // ---- hand off state for round+1 IN MEMORY: cached output
-              // frames plus as-of reads anchored on SETTLED manifests
-              // (≤ round-1). Chains re-anchor on parquet every round, so no
-              // handed-off plan ever references caches older than one round
-              // (see frame-lifetime rule above).
-              //
-              // The cached frames cross the round boundary through an RDD hop
-              // (flat LogicalRDD over the pinned cache): a round's plan embeds
-              // its input frame several times over (eligibility, scheduled
-              // anti-join, discovery union), so chaining raw DataFrames grows
-              // the LOGICAL tree exponentially in round count — measured as a
-              // driver OOM just stringifying a 3-round tree. The hop plays the
-              // role an Iceberg table boundary plays on a real cluster; the
-              // narrow frontier/sketch rows make the Row re-encode cost noise.
-              //
-              // DURABILITY (cluster deployment): the default "cache" hop's
-              // lineage is the pinned cache — MEMORY_AND_DISK survives memory
-              // pressure but NOT executor loss; a lost block would silently
-              // recompute upstream plans whose range boundaries re-sample
-              // (wrong fetch_seq), the exact trap the cache pins against.
-              // Only local mode makes block loss impossible. On a lossy
-              // cluster run pipelineHop = "checkpoint" (reliable-checkpoint
-              // hop — same 1-deep overlap, lineage truncated at durable
-              // files, parity-tested against both other modes) or
-              // commitPipelining = false (the fully synchronous durable
-              // branch below — at most one commit wall per round of extra
-              // latency).
+            // ---- hand off state for round+1 IN MEMORY: checkpointed output
+            // frames plus as-of reads anchored on SETTLED manifests
+            // (≤ round-1). No handed-off plan references a cache of this
+            // round (see frame-lifetime rule above). The last round has no
+            // successor and hops nothing: its commit writes the frames.
+            if (round + 1 < startRound + maxRounds) {
               frontier = hop(out.frontierNext)
               // newKeys is hopped too: seenExact_{N+1} embeds it, and ITS
               // plan embeds seenExact_N — an un-truncated chain recurses one
               // full round-plan per round (the linear cousin of the
-              // exponential frontier blowup above)
+              // exponential frontier blowup the hop exists for)
               seenExact = catalog.load(spark, "url_seen_exact", Some(round - 1)).get
                 .unionByName(hop(out.newKeys))
               urlSeenPrev = Some(hop(sketchNext))
-              if (cfg.robotsFetchInLoop)
-                robotsRules = out.robotsFetched match {
-                  case Some(rn) =>
-                    catalog.load(spark, "robots_rules", Some(round - 1)).get
-                      .unionByName(hop(rn))
-                  case None => catalog.load(spark, "robots_rules", Some(round - 1)).get
-                }
+              if (cfg.robotsFetchInLoop) {
+                val settled = catalog.load(spark, "robots_rules", Some(round - 1)).get
+                robotsRules = out.robotsFetched.map(rn => settled.unionByName(hop(rn)))
+                  .getOrElse(settled)
+              }
               // host graph: settled delta chain (≤ round-1) + this round's
-              // hopped delta — identical to what sync mode reads back after
-              // its settle (deltas ≤ round)
+              // hopped delta — what a resume at round+1 reads back (deltas
+              // ≤ round)
               out.hostEdgesDelta.foreach { d =>
                 hostEdges = Some(catalog.load(spark, "host_edges", Some(round - 1))
                   .map(_.unionByName(hop(d))).getOrElse(hop(d)))
               }
-            } else {
-              // ---- durable handoff (synchronous mode): settle the commit
-              // just queued, then anchor EVERY cross-round frame on the
-              // committed parquet — a durable boundary each round, free of
-              // the cached-lineage caveat above (the commit already wrote
-              // these tables; the loads are lazy readers).
-              settle()
-              frontier = catalog.load(spark, "frontier").get
-              seenExact = catalog.load(spark, "url_seen_exact").get
-              urlSeenPrev = catalog.load(spark, "url_seen")
-              if (cfg.robotsFetchInLoop)
-                robotsRules = catalog.load(spark, "robots_rules").get
-              if (cfg.rankPriority) hostEdges = catalog.load(spark, "host_edges")
             }
             base += out.fetchedCount
             if (!mapside) {
@@ -662,40 +682,20 @@ object Crawl {
       // latest, then round N's manifest would appear asynchronously). If the
       // in-flight commit itself failed, the loop already threw from settle();
       // the Try here only absorbs that duplicate on the error path. The
-      // await is FINITE: a wedged commit (hung filesystem write) must not
-      // block the finally path forever and swallow the primary exception —
-      // on timeout the commit is ABANDONED SAFELY, in three layers:
-      //   1. the poison flag (commitAbandoned, polled by the catalog before
-      //      each not-yet-started table write and again immediately before
-      //      the manifest rename) stops the commit from publishing or
-      //      starting new writes;
-      //   2. cancelJobGroup kills the RUNNING table-write jobs — they run
-      //      on the catalog's shared pool, which shutdownNow below cannot
-      //      reach, and a wedged write would otherwise leak that pool's
-      //      thread forever AND keep reading frames release(live) is about
-      //      to unpin (plain cancelJobGroup, not ...AndFutureJobs: the
-      //      latter blacklists the group id and would kill a same-JVM
-      //      retry of this round);
-      //   3. shutdownNow() interrupts the orchestrator thread blocked in
-      //      the catalog's internal Await.
-      // Net: no manifest for round N can appear after the caller observed
-      // the crawl as failed (the abort poll is adjacent to the rename), and
-      // no abandoned write outlives the quiesce to race a retry's .tmp
-      // paths beyond cancellation-delivery latency.
-      inFlight.foreach(f => scala.util.Try(
-        Await.result(f.fut, scala.concurrent.duration.Duration(
-          cfg.commitQuiesceTimeoutSec.toLong, "sec"))) match {
+      // await is FINITE: a wedged commit must not block the finally path
+      // forever and swallow the primary exception — on timeout the commit
+      // is abandoned (see abandon above). A commit settle() already
+      // abandoned is not in flight any more and is not waited on twice.
+      inFlight.foreach(f => scala.util.Try(Await.result(f.fut, quiesce)) match {
         case scala.util.Failure(_: java.util.concurrent.TimeoutException) =>
-          commitAbandoned.set(true)
-          spark.sparkContext.cancelJobGroup(StateCatalog.commitJobGroup(f.round))
-          commitPool.shutdownNow()
+          abandon(f)
           System.err.println(s"[crawl] finally: in-flight commit did not quiesce " +
             s"within ${cfg.commitQuiesceTimeoutSec}s — abandoned (publication " +
             "poisoned, write jobs cancelled, orchestrator interrupted); the " +
             "primary exception propagates")
         case _ =>
       })
-      // release every cache the loop still pins — settled rounds' retired
+      // release every cache the loop still pins — an unsettled commit's
       // frames AND any half-built round's, whichever statement threw
       release(live.toSeq)
     }

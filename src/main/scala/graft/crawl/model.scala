@@ -92,9 +92,9 @@ final case class CrawlConfig(
     // and survive the round budget first; the total order is preserved
     // (canon_url still ends the struct). The signal LAGS one round by
     // construction — round N ranks over links discovered through round N−1,
-    // identically in sync and pipelined modes (parity-tested). Committed
-    // fetch_log/frontier schemas are unchanged: rank_bucket lives only in
-    // the in-round frames.
+    // identically in the pipelined loop and a stepwise one-round-per-call
+    // resume (parity-tested). Committed fetch_log/frontier schemas are
+    // unchanged: rank_bucket lives only in the in-round frames.
     rankPriority: Boolean = false,
     rankIters: Int = 3,
     rankBuckets: Int = 4,
@@ -141,40 +141,18 @@ final case class CrawlConfig(
     //     point, where P=2^15 × ~1.5 MB ≈ 48 GB can neither collect nor
     //     broadcast. Verdicts are identical between tiers by construction.
     sketchDelivery: String = "broadcast",
-    // Overlap round N's commit (table writes + manifest) with round N+1's
-    // compute: the commit is a fixed per-round cost (parquet writes, mostly
-    // I/O-bound — measured at ~half the round wall at 16 cores) that does
-    // not shrink with cores, so hiding it under the next round's compute is
-    // the single biggest Amdahl cut in the loop. Depth is exactly 1 and
-    // commit N must settle before commit N+1 starts (manifests are ordered,
-    // and the append-delta chain of N+1 anchors on N's manifest), so crash
-    // durability is unchanged: at most the one in-flight round is lost,
-    // same as the synchronous loop. Committed bytes are identical either
-    // way — the determinism/resume contract is mode-independent.
-    commitPipelining: Boolean = true,
-    // How pipelined mode's cross-round frames survive the round boundary:
-    //   "cache"      — flat LogicalRDD hop over the pinned cache (zero extra
-    //     I/O). Lineage bottoms out in executor blocks: MEMORY_AND_DISK
-    //     survives memory pressure but NOT executor loss, so this tier is a
-    //     LOCAL-MODE / reliable-store assumption (block loss would silently
-    //     recompute with re-sampled range boundaries — wrong fetch_seq).
-    //   "checkpoint" — reliable Dataset.checkpoint(): the handed-off frames
-    //     (frontier, new seen keys, sketch rows, in-loop robots delta) are
-    //     written to `checkpointDir` and re-read from there; lineage is
-    //     TRUNCATED at durable files, so executor loss recomputes nothing.
-    //     This is the cluster-durable pipelined tier: it keeps the 1-deep
-    //     commit overlap while restoring sync mode's durability, at the cost
-    //     of one extra write+read of the (narrow) cross-round frames.
-    pipelineHop: String = "cache", // "cache" | "checkpoint"
-    // Reliable-checkpoint root for pipelineHop = "checkpoint". On a cluster
-    // this MUST be shared storage (HDFS/S3 — same fault domain as the
-    // catalog); empty = a fresh local temp dir (sandbox/tests). Ignored by
-    // the cache tier.
+    // Root for the reliable checkpoints that carry the pipelined loop's
+    // cross-round frames (frontier, new seen keys, sketch rows, in-loop
+    // robots delta) over the round boundary. On a cluster this MUST be
+    // shared storage (HDFS/S3 — same fault domain as the catalog); empty =
+    // the SparkContext's checkpoint dir if one is set, else one local temp
+    // dir per context (sandbox/tests).
     checkpointDir: String = "",
-    // How long the loop's FAILURE path waits for an in-flight commit to
-    // settle before abandoning it (finally-block quiesce). Abandonment is
-    // safe — publication is poisoned and the commit thread interrupted, so
-    // the wedged commit can never publish its manifest after the caller
+    // How long the loop waits for an in-flight commit to settle — at the
+    // round barrier, after the last round, and in the failure path's
+    // finally-block quiesce — before abandoning it. Abandonment is safe —
+    // publication is poisoned and the commit thread interrupted, so the
+    // wedged commit can never publish its manifest after the caller
     // observed the crawl as failed — but generous is right in production: a
     // slow-but-healthy commit that settles inside the window keeps its
     // round. Tests shrink it to exercise the abandonment path.

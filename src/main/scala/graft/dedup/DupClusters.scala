@@ -81,8 +81,9 @@ object DupClusters {
     // so a persist-only loop hands the analyzer an O(12^k)-node logical
     // tree — the driver dies planning long before any task runs. Reliable
     // checkpoint when the session has a checkpoint dir (the cluster
-    // deployment — survives executor loss, same contract as the crawl's
-    // pipelineHop="checkpoint"); localCheckpoint otherwise (local/test).
+    // deployment — survives executor loss, same contract as the crawl
+    // loop's cross-round hop, which sets one on every session it runs in);
+    // localCheckpoint otherwise (local/test).
     // LAZY in both tiers: the checksum action right after is the first job
     // and doubles as the forcing action — eager would submit a dedicated
     // count() job per iteration just to force it, adding one driver barrier

@@ -18,9 +18,9 @@ class CrawlSpec extends AnyFunSuite {
     ratePerSec = 2.0, burst = 4, numPartitions = 8,
     bloomExpectedPerPartition = 4096)
 
-  /** Build corpus+robots in memory, bootstrap a catalog, run K rounds. */
-  private def runCrawl(dir: String, nPages: Long, nSeeds: Int, rounds: Int,
-                       c: CrawlConfig = cfg): (StateCatalog, Seq[CrawlRound.RoundResult], FixtureGen.Universe) = {
+  /** Build corpus+robots in memory and bootstrap a catalog. */
+  private def bootstrapCrawl(dir: String, nPages: Long, nSeeds: Int,
+                             c: CrawlConfig): (StateCatalog, FixtureGen.Universe) = {
     import spark.implicits._
     val uni = FixtureGen.Universe(nPages)
     val pages = spark.range(nPages).map(p => uni.pageRow(p)).toDF()
@@ -29,8 +29,33 @@ class CrawlSpec extends AnyFunSuite {
       .toDF("host", "robots_body")
     val catalog = new HadoopSnapshotCatalog(dir)
     Crawl.bootstrap(spark, catalog, pages.unionByName(v2), robots, uni.seeds(nSeeds), c)
-    val results = Crawl.runRounds(spark, catalog, c, rounds)
-    (catalog, results, uni)
+    (catalog, uni)
+  }
+
+  /** Build corpus+robots in memory, bootstrap a catalog, run K rounds. */
+  private def runCrawl(dir: String, nPages: Long, nSeeds: Int, rounds: Int,
+                       c: CrawlConfig = cfg): (StateCatalog, Seq[CrawlRound.RoundResult], FixtureGen.Universe) = {
+    val (catalog, uni) = bootstrapCrawl(dir, nPages, nSeeds, c)
+    (catalog, Crawl.runRounds(spark, catalog, c, rounds), uni)
+  }
+
+  /** The synchronous parity reference for the pipelined loop: the same
+    * crawl as [[runCrawl]], but one `runRounds` call per round on a shared
+    * CrawlState, until a round makes no progress. Every call is a resume —
+    * it re-anchors frontier, seen set, sketch, robots rules and host_edges
+    * on the committed parquet and settles its commit before returning — so
+    * no in-memory state crosses a round boundary. */
+  private def stepwise(dir: String, nPages: Long, nSeeds: Int, rounds: Int,
+                       c: CrawlConfig = cfg): (StateCatalog, Seq[CrawlRound.RoundResult]) = {
+    val (catalog, _) = bootstrapCrawl(dir, nPages, nSeeds, c)
+    val st = Crawl.openState(spark, catalog, c)
+    val results = scala.collection.mutable.ArrayBuffer[CrawlRound.RoundResult]()
+    try {
+      while (results.size < rounds &&
+          !results.lastOption.exists(r => r.fetched == 0 && r.robotsFetched == 0))
+        results ++= Crawl.runRounds(spark, catalog, c, 1, st)
+    } finally st.close()
+    (catalog, results.toSeq)
   }
 
   private def tmp(): String = Files.createTempDirectory("crawlspec").toString
@@ -452,22 +477,18 @@ class CrawlSpec extends AnyFunSuite {
       "URL-seen sets diverge between delivery tiers")
   }
 
-  test("pipelined commit ≡ synchronous loop ≡ checkpoint hop: tables, metrics, drain") {
+  test("pipelined loop ≡ stepwise reference: tables, metrics, drain") {
     // enough rounds that the frontier DRAINS: the pipelined loop runs one
     // speculative round past the drain and must discard it uncommitted
-    val (catA, resA, _) = runCrawl(tmp(), 400, 6, 30) // default: pipelined, cache hop
-    val (catB, resB, _) = runCrawl(tmp(), 400, 6, 30, cfg.copy(commitPipelining = false))
-    // cluster-durable pipelined tier: reliable-checkpoint hop
     val ckptDir = tmp()
-    val (catC, resC, _) = runCrawl(tmp(), 400, 6, 30,
-      cfg.copy(pipelineHop = "checkpoint", checkpointDir = ckptDir))
+    val (catA, resA, _) = runCrawl(tmp(), 400, 6, 30, cfg.copy(checkpointDir = ckptDir))
+    val (catB, resB) = stepwise(tmp(), 400, 6, 30)
     assert(resA.size < 30, "fixture did not drain — the discard path went unexercised")
     val sig = (rs: Seq[CrawlRound.RoundResult]) =>
       rs.map(r => (r.round, r.fetched, r.enqueued, r.robotsDenied))
     assert(sig(resA) == sig(resB))
-    assert(sig(resA) == sig(resC), "checkpoint-hop run diverged from cache-hop run")
-    // the checkpoint hop actually wrote durable frames (lineage truncation
-    // is real, not a silent fall-through to the cache tier)
+    // the pipelined run actually wrote durable frames (lineage truncation
+    // is real, not a silent in-memory handoff)
     val ckptFiles = {
       val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(ckptDir))
       try walk.iterator().asScala.count(java.nio.file.Files.isRegularFile(_))
@@ -475,32 +496,26 @@ class CrawlSpec extends AnyFunSuite {
     }
     assert(ckptFiles > 0, "checkpoint dir is empty — no frame was durably hopped")
     // identical committed rounds: the speculative post-drain round left no trace
-    assert(catA.latestRound == catB.latestRound && catA.latestRound == catC.latestRound)
+    assert(catA.latestRound == catB.latestRound)
     val proj = Seq("fetch_seq", "canon_url", "status", "scheduled_offset_ms", "text_sha256")
     val a = Crawl.fullFetchLog(spark, catA).orderBy("fetch_seq").select(proj.map(col): _*).collect()
     val b = Crawl.fullFetchLog(spark, catB).orderBy("fetch_seq").select(proj.map(col): _*).collect()
-    val c = Crawl.fullFetchLog(spark, catC).orderBy("fetch_seq").select(proj.map(col): _*).collect()
-    assert(a.length == b.length && a.sameElements(b), "pipelined and sync runs diverged")
-    assert(a.length == c.length && a.sameElements(c), "checkpoint and cache hops diverged")
+    assert(a.length == b.length && a.sameElements(b), "pipelined and stepwise runs diverged")
     // commit-time metrics (Observation-fed, including total_fetched computed
-    // from the driver-side fetch_seq base handoff) agree between modes
+    // from the driver-side fetch_seq base handoff) agree between the two
     val last = catA.latestRound.get
     assert(catA.metricsOf(last) == catB.metricsOf(last))
-    assert(catA.metricsOf(last) == catC.metricsOf(last))
     assert(catA.metricsOf(last)("total_fetched") == resA.map(_.fetched).sum)
     // the seen set (append-delta chain) agrees too
     val seenA = catA.load(spark, "url_seen_exact").get
     val seenB = catB.load(spark, "url_seen_exact").get
-    val seenC = catC.load(spark, "url_seen_exact").get
     assert(seenA.exceptAll(seenB).isEmpty && seenB.exceptAll(seenA).isEmpty)
-    assert(seenA.exceptAll(seenC).isEmpty && seenC.exceptAll(seenA).isEmpty)
   }
 
-  test("checkpoint hop with in-loop robots: robots-delta frame hops durably, ≡ cache hop") {
+  test("in-loop robots: robots-delta frame hops durably, ≡ stepwise") {
     val inLoop = cfg.copy(robotsFetchInLoop = true)
     val (catA, resA, _) = runCrawl(tmp(), 400, 6, 4, inLoop)
-    val (catB, resB, _) = runCrawl(tmp(), 400, 6, 4,
-      inLoop.copy(pipelineHop = "checkpoint", checkpointDir = tmp()))
+    val (catB, resB) = stepwise(tmp(), 400, 6, 4, inLoop)
     assert(resA.map(r => (r.round, r.fetched, r.robotsFetched)) ==
       resB.map(r => (r.round, r.fetched, r.robotsFetched)))
     assert(resA.head.robotsFetched > 0, "in-loop robots round went unexercised")
@@ -508,7 +523,23 @@ class CrawlSpec extends AnyFunSuite {
       .select("fetch_seq", "canon_url", "status").collect()
     val b = Crawl.fullFetchLog(spark, catB).orderBy("fetch_seq")
       .select("fetch_seq", "canon_url", "status").collect()
-    assert(a.length == b.length && a.sameElements(b), "in-loop checkpoint run diverged")
+    assert(a.length == b.length && a.sameElements(b), "in-loop pipelined run diverged")
+  }
+
+  test("checkpoint dir: one per SparkContext, reused by every crawl in the session") {
+    val sc = spark.sparkContext
+    def files(d: String): Int = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(new java.net.URI(d)))
+      try walk.iterator().asScala.count(java.nio.file.Files.isRegularFile(_))
+      finally walk.close()
+    }
+    runCrawl(tmp(), 400, 6, 2)
+    val dir = sc.getCheckpointDir
+    assert(dir.isDefined, "the crawl ran without a checkpoint dir")
+    val before = files(dir.get)
+    runCrawl(tmp(), 400, 6, 2)
+    assert(sc.getCheckpointDir == dir, "a second crawl replaced the context's checkpoint dir")
+    assert(files(dir.get) > before, "the second crawl hopped no frame through the shared dir")
   }
 
   test("abandoned in-flight commit never publishes its manifest (quiesce poison)") {
@@ -562,7 +593,7 @@ class CrawlSpec extends AnyFunSuite {
       }
       override def metricsOf(round: Int) = inner.metricsOf(round)
     }
-    val c = cfg.copy(commitQuiesceTimeoutSec = 2) // pipelined by default
+    val c = cfg.copy(commitQuiesceTimeoutSec = 2)
     Crawl.bootstrap(spark, catalog, pages, robots, uni.seeds(8), c)
     val thrown = try intercept[RuntimeException] {
       Crawl.runRounds(spark, catalog, c, 3)
@@ -581,6 +612,70 @@ class CrawlSpec extends AnyFunSuite {
     assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(dir, "_manifests", "manifest_000001.json")),
       "abandoned commit published round 1's manifest after the caller saw the failure")
+    assert(inner.latestRound.contains(0), "catalog advanced past the bootstrap snapshot")
+  }
+
+  test("healthy-path settle is bounded: a wedged commit fails the crawl, never publishes") {
+    import spark.implicits._
+    val dir = tmp()
+    val uni = FixtureGen.Universe(500)
+    val pages = spark.range(500).map(p => uni.pageRow(p)).toDF()
+    val robots = (0 until uni.nHosts).flatMap(i => uni.robotsBody(i).map(b => (uni.host(i), b)))
+      .toDF("host", "robots_body")
+    val inner = new HadoopSnapshotCatalog(dir)
+    // Wedges round 1's commit UNINTERRUPTIBLY until `releaseWedge`; nothing
+    // else goes wrong, so only the bounded settle can end the crawl.
+    val releaseWedge = new java.util.concurrent.CountDownLatch(1)
+    val attempted = new java.util.concurrent.CountDownLatch(1)
+    val commitFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    @volatile var enteredAt = 0L
+    val catalog = new StateCatalog {
+      override def latestRound = inner.latestRound
+      override def load(spark: org.apache.spark.sql.SparkSession, table: String,
+          atRound: Option[Int]) = inner.load(spark, table, atRound)
+      override def commit(round: Int, tables: Map[String, org.apache.spark.sql.DataFrame],
+          metrics: => Map[String, Long],
+          appends: Map[String, org.apache.spark.sql.DataFrame],
+          abort: () => Boolean) = {
+        if (round == 1) {
+          enteredAt = System.nanoTime()
+          var done = false
+          while (!done) try { releaseWedge.await(); done = true }
+          catch { case _: InterruptedException => } // swallow the abandon interrupt
+          try inner.commit(round, tables, metrics, appends, abort)
+          catch { case t: Throwable => commitFailure.set(t); throw t }
+          finally attempted.countDown()
+        } else inner.commit(round, tables, metrics, appends, abort)
+      }
+      override def metricsOf(round: Int) = inner.metricsOf(round)
+    }
+    val timeoutSec = 2
+    val c = cfg.copy(commitQuiesceTimeoutSec = timeoutSec)
+    Crawl.bootstrap(spark, catalog, pages, robots, uni.seeds(8), c)
+    // an unbounded settle waits on the wedge forever: release it after 60 s
+    // so that failure shows as round 1 publishing, not as a hung suite
+    val watchdog = new Thread(() =>
+      if (!releaseWedge.await(60, java.util.concurrent.TimeUnit.SECONDS)) releaseWedge.countDown())
+    watchdog.setDaemon(true)
+    watchdog.start()
+    val (thrown, waitedS) = try {
+      val t = intercept[IllegalStateException](Crawl.runRounds(spark, catalog, c, 1))
+      (t, (System.nanoTime() - enteredAt) / 1e9)
+    } finally releaseWedge.countDown()
+    assert(thrown.getMessage.contains("did not settle"), s"unexpected failure: $thrown")
+    // the wait starts no earlier than the wedge, so it is at least the
+    // timeout; the slack only absorbs the abandon path on a busy box
+    assert(waitedS >= timeoutSec && waitedS < timeoutSec + 20,
+      f"crawl failed $waitedS%.1fs after the commit wedged (timeout ${timeoutSec}s)")
+    // the abandoned thread resumes and must stop at an abort gate
+    assert(attempted.await(120, java.util.concurrent.TimeUnit.SECONDS),
+      "abandoned commit thread never finished its attempt")
+    assert(commitFailure.get.isInstanceOf[IllegalStateException] &&
+        commitFailure.get.getMessage.contains("aborted by caller"),
+      s"expected an abort-gate refusal, got: ${commitFailure.get}")
+    assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(dir, "_manifests", "manifest_000001.json")),
+      "abandoned commit published round 1's manifest after the crawl failed")
     assert(inner.latestRound.contains(0), "catalog advanced past the bootstrap snapshot")
   }
 
@@ -775,13 +870,14 @@ class CrawlSpec extends AnyFunSuite {
     // the coldest bucket and the signal is a no-op by construction)
     val rp = cfg.copy(rankPriority = true, roundBudget = 24)
     val (catA, resA, _) = runCrawl(tmp(), 2000, 32, 6, rp)
-    val (catB, _, _) = runCrawl(tmp(), 2000, 32, 6, rp.copy(commitPipelining = false))
+    val (catB, _) = stepwise(tmp(), 2000, 32, 6, rp)
     assert(resA.map(_.fetched).sum > 0)
     val proj = Seq("fetch_seq", "canon_url", "status", "scheduled_offset_ms", "text_sha256")
     val a = Crawl.fullFetchLog(spark, catA).orderBy("fetch_seq").select(proj.map(col): _*).collect()
     val b = Crawl.fullFetchLog(spark, catB).orderBy("fetch_seq").select(proj.map(col): _*).collect()
-    // the rank signal lags one round identically in both commit modes
-    assert(a.length == b.length && a.sameElements(b), "rank-priority pipelined and sync diverged")
+    // the rank signal lags one round identically in the pipelined loop and
+    // the stepwise (one resume per round) reference
+    assert(a.length == b.length && a.sameElements(b), "rank-priority pipelined and stepwise diverged")
     // the committed host graph: non-empty append chain of cross-host edges
     val edges = catA.load(spark, "host_edges").get
     assert(edges.count() > 0, "no host_edges delta was committed")
